@@ -42,16 +42,9 @@ import org.apache.spark.sql.SparkSession
   * one outlier run settled by two agreeing runs — tellable apart from
   * the JSON alone.
   *
-  * == Diagnosis modes ==
-  *
-  * SPARK_GRAFT_BENCH_SHARED=1 restores the legacy single-session run
-  * (with the catalog-level release between queries) so the inflation
-  * remains reproducible; SPARK_GRAFT_BENCH_DIAG=1 prints per-query
-  * JVM/storage counters (GC time delta, metaspace, loaded classes,
-  * storage memory, block-manager disk bytes) to stderr in either mode.
-  * The round-7 diagnosis run with both flags named the accumulators:
-  * monotonically growing GC time per query and metaspace/class count
-  * (numbers in PLANS.md round-7 section).
+  * The round-7 single-session diagnosis that led to this model (GC
+  * time and metaspace/class count growing monotonically per query in a
+  * shared session) is recorded in PLANS.md's round-7 section.
   */
 object Bench {
   private val sfDir =
@@ -67,7 +60,7 @@ object Bench {
   private val shufflePartitions =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
 
-  private def newSession(): SparkSession = {
+  private[graft] def newSession(): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = SparkSession.builder()
@@ -81,7 +74,10 @@ object Bench {
     spark
   }
 
-  private def runOne(spark: SparkSession, name: String): Double = {
+  /** One run of `name` over `dir` through the noop sink: seconds, or
+    * -1 when the query throws. */
+  private[graft] def runOne(spark: SparkSession, name: String,
+                            dir: String = sfDir): Double = {
     // Spark's cache manager dedupes by LOGICAL PLAN: an operator that
     // materializes its result via cache+count (Checkpoints.materialize)
     // would hand every run after the warm-up the warm-up's cached
@@ -92,7 +88,7 @@ object Bench {
     spark.catalog.clearCache()
     val fn = SparkEntry.queries(name)
     val t0 = System.nanoTime()
-    try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    try fn(spark, dir).write.format("noop").mode("overwrite").save()
     catch { case e: Throwable =>
       System.err.println(s"[bench] $name failed: ${e.getMessage}")
       return -1.0
@@ -106,57 +102,6 @@ object Bench {
     (runOne(spark, name), runOne(spark, name))
   }
 
-  // ---- diagnosis instrumentation (SPARK_GRAFT_BENCH_DIAG=1) ----
-
-  private val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").contains("1")
-
-  private def gcMillis: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-  }
-
-  private def dirBytes(d: java.io.File): Long =
-    if (!d.exists) 0L
-    else if (d.isFile) d.length
-    else Option(d.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
-
-  /** Bytes under this JVM's block-manager / spark temp dirs — shuffle
-    * files, disk-spilled blocks, broadcast disk copies. */
-  private def sparkLocalBytes: Long = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    Option(tmp.listFiles).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("blockmgr-") ||
-        f.getName.startsWith("spark-"))
-      .map(dirBytes).sum
-  }
-
-  private def diagLine(spark: SparkSession, tag: String,
-                       gc0: Long): Unit = if (diag) {
-    import scala.jdk.CollectionConverters._
-    import java.lang.management.{ManagementFactory => mf}
-    val meta = mf.getMemoryPoolMXBeans.asScala
-      .find(_.getName.contains("Metaspace")).map(_.getUsage.getUsed / 1e6)
-      .getOrElse(-1.0)
-    val classes = mf.getClassLoadingMXBean.getLoadedClassCount
-    val heap = mf.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6
-    val storage = spark.sparkContext.getExecutorMemoryStatus.values
-      .map { case (max, free) => max - free }.sum / 1e6
-    System.err.println(
-      f"[diag] $tag: gc+=${gcMillis - gc0}%dms heap=$heap%.0fMB " +
-        f"meta=$meta%.0fMB classes=$classes%d storageMem=$storage%.0fMB " +
-        f"localDirs=${sparkLocalBytes / 1e6}%.0fMB")
-  }
-
-  // ---- legacy shared-session release (kept for the diagnosis mode) ----
-
-  private def releaseStorage(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
-
   final case class Probe(t1: Double, t2: Double,
                          reprobe: Option[Double],
                          hist: Option[Double] = None) {
@@ -166,7 +111,8 @@ object Bench {
     // measurements — reprobes fire exactly under the flaky
     // conditions where a one-off failure is most likely
     private def ok: Seq[Double] = runs.filter(_ >= 0)
-    def best: Double = if (ok.isEmpty) -1.0 else ok.min
+    def failed: Boolean = ok.isEmpty
+    def best: Double = if (failed) -1.0 else ok.min
     // Without a reprobe: both runs must agree within 1.5x. With a
     // reprobe (fired because the first two disagreed, or because both
     // exceeded the recorded history), the question is whether the
@@ -328,10 +274,15 @@ object Bench {
     * [[Probe.flaky]]: the in-band signal that a recorded number is
     * disputed by the probes — BENCH_r08's q64/q65 carried 22 s of
     * sustained harness contention that nothing in the compact line
-    * could reveal. */
+    * could reveal.
+    *
+    * `failed` (same shape) names the queries no run of which succeeded:
+    * `value` and `best_total` leave them out, so without it a broken
+    * query would read as a smaller total. Absent when nothing failed. */
   def compactLine(results: Seq[(String, Probe)], sf: String,
                   epoch: Option[Double] = None): String = {
     val flaky = results.filter(_._2.flaky).map(_._1)
+    val failed = results.filter(_._2.failed).map(_._1)
     val flakySet = flaky.toSet
     // Session-level contention sentinel: two consecutive driver
     // sessions recorded inflated raw totals (BENCH_r11/r12) that the
@@ -343,6 +294,13 @@ object Bench {
     val rawSum = results.map(_._2.best).filter(_ >= 0).sum
     val bestSum = results.map(_._2.bestKnown).filter(_ >= 0).sum
     val contended = flaky.nonEmpty || (bestSum > 0 && rawSum / bestSum > 1.3)
+    // ≤3 names plus the full count, or nothing when the list is empty
+    def marker(key: String, qs: Seq[String]): String = if (qs.isEmpty) "" else {
+      val ns = qs.take(3).map("\"" + _ + "\"").mkString("[", ",", "]")
+      s""""$key":$ns,"${key}_n":${qs.size},"""
+    }
+    val fl = marker("flaky", flaky)
+    val fa = marker("failed", failed)
     def build(dec: Int, slim: Boolean, topK: Int): String = {
       def n(v: Double) = s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)
       // the top-K cut keeps the K slowest PLUS every flaky query: a
@@ -373,10 +331,6 @@ object Bench {
         results.map(_._2.bestKnown).filter(_ >= 0).sum)
       val sfv = if (slim) sf.split('/').last else sf
       val unit = if (slim) "" else """"unit":"sec","""
-      val fl = if (flaky.isEmpty) "" else {
-        val ns = flaky.take(3).map("\"" + _ + "\"").mkString("[", ",", "]")
-        s""""flaky":$ns,"flaky_n":${flaky.size},"""
-      }
       val om = if (shown.size < results.size)
         s""""omitted":${results.size - shown.size},""" else ""
       val cd = if (contended) """"contended":true,""" else ""
@@ -387,7 +341,7 @@ object Bench {
       // ladder level (like the flaky names: a disputed total is
       // unreadable without it).
       val ep = epoch.map(e => f""""epoch":${num2(e)},""").getOrElse("")
-      s"""{"metric":"total","value":$t,"best_total":$bt,$cd$ep$unit$fl$om"queries":$qs,"sf":"$sfv"}"""
+      s"""{"metric":"total","value":$t,"best_total":$bt,$cd$ep$unit$fa$fl$om"queries":$qs,"sf":"$sfv"}"""
     }
     // Ladder order = information preservation. Flagged NAMES are never
     // sacrificed (round-9 lesson, the hard way: the driver recorded
@@ -439,7 +393,6 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val shared = sys.env.get("SPARK_GRAFT_BENCH_SHARED").contains("1")
     val outFile = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     // SPARK_GRAFT_BENCH_ONLY (comma list of name substrings) narrows the
     // run for local iteration on a single query's plan.
@@ -448,11 +401,10 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.contains)))
 
-    // ---- epoch bracket (full default-mode sweeps only: a BENCH_ONLY
-    // iteration or the legacy shared mode is not a sweep the history
-    // merge will read). Pre-sweep calibration runs FIRST so the
+    // ---- epoch bracket (full sweeps only: a BENCH_ONLY iteration is
+    // not a sweep the history merge will read). Pre-sweep calibration runs FIRST so the
     // factor reflects the same window the sweep starts in.
-    val doCalib = !shared && only.isEmpty &&
+    val doCalib = only.isEmpty &&
       !sys.env.get("SPARK_GRAFT_BENCH_CALIB").contains("0")
     val calibPre = if (doCalib) calibrate() else None
     var calibPost: Option[Double] = None
@@ -488,64 +440,41 @@ object Bench {
     }
 
     var done = List.empty[(String, Probe)]
-    if (shared) {
-      // legacy mode: one session for the whole pass, catalog-level
-      // release between queries — reproduces the r4-r6 inflation for
-      // diagnosis
+    // fresh session per query == isolated-run methodology
+    val history = loadHistory()
+    if (history.nonEmpty)
+      System.err.println(s"[bench] history loaded: ${history.size} queries")
+    names.foreach { n =>
+      System.err.println(s"[bench] $n ...")
       val spark = newSession()
-      names.take(1).foreach(n => runOne(spark, n)) // global warm-up
-      names.foreach { n =>
-        releaseStorage(spark)
-        val gc0 = gcMillis
-        System.err.println(s"[bench] $n ...")
-        val t1 = runOne(spark, n)
-        val t2 = runOne(spark, n)
-        diagLine(spark, n, gc0)
-        val p = Probe(t1, t2, None)
-        System.err.println(f"[bench] $n: ${p.best}%.2f s")
-        done = done :+ (n -> p)
-        writeOut(done)
-      }
+      val (t1, t2) = measure(spark, n)
       spark.stop()
-    } else {
-      // default: fresh session per query == isolated-run methodology
-      val history = loadHistory()
-      if (history.nonEmpty)
-        System.err.println(s"[bench] history loaded: ${history.size} queries")
-      names.foreach { n =>
-        System.err.println(s"[bench] $n ...")
-        val spark = newSession()
-        val gc0 = gcMillis
-        val (t1, t2) = measure(spark, n)
-        diagLine(spark, n, gc0)
-        spark.stop()
-        val h = history.get(n)
-        // reprobe in another fresh session when (a) the two runs
-        // disagree >1.5x — one-off noise suspected — or (b) BOTH runs
-        // exceed 2x this query's recorded history: sustained
-        // contention agreement alone cannot reject (the BENCH_r08
-        // q64/q65 failure). The later session gives a contention
-        // window time to clear; if the reprobe still lands high, the
-        // number is real-or-flagged (Probe.suspect survives).
-        val ok = Seq(t1, t2).filter(_ >= 0)
-        val disagree = ok.size == 2 && ok.max > ok.min * 1.5
-        val overHistory = ok.nonEmpty &&
-          h.exists(hv => hv > 0 && ok.min > 2 * hv)
-        val reprobe = if (disagree || overHistory) {
-          val s2 = newSession()
-          val r = { runOne(s2, n); runOne(s2, n) }
-          s2.stop()
-          Some(r)
-        } else None
-        val p = Probe(t1, t2, reprobe, h)
-        System.err.println(
-          f"[bench] $n: ${p.best}%.2f s (stable=${p.stable} " +
-            f"suspect=${p.suspect})")
-        // flush partial results after every query: if the harness kills
-        // this process on a timeout, the file still names the culprit
-        done = done :+ (n -> p)
-        writeOut(done)
-      }
+      val h = history.get(n)
+      // reprobe in another fresh session when (a) the two runs
+      // disagree >1.5x — one-off noise suspected — or (b) BOTH runs
+      // exceed 2x this query's recorded history: sustained
+      // contention agreement alone cannot reject (the BENCH_r08
+      // q64/q65 failure). The later session gives a contention
+      // window time to clear; if the reprobe still lands high, the
+      // number is real-or-flagged (Probe.suspect survives).
+      val ok = Seq(t1, t2).filter(_ >= 0)
+      val disagree = ok.size == 2 && ok.max > ok.min * 1.5
+      val overHistory = ok.nonEmpty &&
+        h.exists(hv => hv > 0 && ok.min > 2 * hv)
+      val reprobe = if (disagree || overHistory) {
+        val s2 = newSession()
+        val r = { runOne(s2, n); runOne(s2, n) }
+        s2.stop()
+        Some(r)
+      } else None
+      val p = Probe(t1, t2, reprobe, h)
+      System.err.println(
+        f"[bench] $n: ${p.best}%.2f s (stable=${p.stable} " +
+          f"suspect=${p.suspect})")
+      // flush partial results after every query: if the harness kills
+      // this process on a timeout, the file still names the culprit
+      done = done :+ (n -> p)
+      writeOut(done)
     }
     // post-sweep calibration closes the epoch bracket (min of the
     // pair feeds the factor: either side may catch a quiet window)

@@ -46,8 +46,7 @@ object CitibikePipeline {
     * transactional table format; with plain parquet, recovery is
     * re-deriving the five tables from ImportedTrips. */
   def run(spark: SparkSession, inputDir: String, warehouse: String,
-          provider: Waypoints.RouteProvider = Waypoints.StraightLineRoutes,
-          distributedIngest: Boolean = true): Int = {
+          provider: Waypoints.RouteProvider = Waypoints.StraightLineRoutes): Int = {
     val archives = Ingest.listArchives(inputDir,
       spark.sparkContext.hadoopConfiguration)
     var manifest = TableStore.readOrEmpty(spark, warehouse, "StatusDataTable",
@@ -57,8 +56,7 @@ object CitibikePipeline {
       StatusData.alreadyLoaded(manifest, a.year.toInt, a.month.map(_.toInt)))
 
     newOnes.foreach { a =>
-      val raw = if (distributedIngest) Ingest.readArchiveDistributed(spark, a)
-                else Ingest.readArchive(spark, a)
+      val raw = Ingest.readArchiveDistributed(spark, a)
       val imported = Quality.importTrips(raw, a.year).cache()
       try {
         // the canonical fact table, partitioned for per-period pruning
@@ -144,46 +142,26 @@ object CitibikePipeline {
     } finally imported.unpersist()
   }
 
-  private def updateLineGraph(spark: SparkSession, wh: String, imported: DataFrame): Unit =
-    updateLineGraph(spark, wh, imported,
-      TableStore.readOrEmpty(spark, wh, "LineGraphTable", lineGraphSchema))
-
-  private def updateLineGraph(spark: SparkSession, wh: String, imported: DataFrame,
-                              existing: DataFrame): Unit = {
-    val merged = LineGraph.merge(existing, LineGraph.build(imported))
-    TableStore.write(merged, wh, "LineGraphTable")
+  private def updateLineGraph(spark: SparkSession, wh: String, imported: DataFrame): Unit = {
+    val existing = TableStore.readOrEmpty(spark, wh, "LineGraphTable", lineGraphSchema)
+    TableStore.write(LineGraph.merge(existing, LineGraph.build(imported)), wh, "LineGraphTable")
   }
 
-  private def updateHeatMap(spark: SparkSession, wh: String, imported: DataFrame): Unit =
-    updateHeatMap(spark, wh, imported,
-      TableStore.readOrEmpty(spark, wh, "HeatMapTable", heatMapSchema))
-
-  private def updateHeatMap(spark: SparkSession, wh: String, imported: DataFrame,
-                            existing: DataFrame): Unit = {
-    val merged = HeatMap.merge(existing, HeatMap.build(imported))
-    TableStore.write(merged, wh, "HeatMapTable")
+  private def updateHeatMap(spark: SparkSession, wh: String, imported: DataFrame): Unit = {
+    val existing = TableStore.readOrEmpty(spark, wh, "HeatMapTable", heatMapSchema)
+    TableStore.write(HeatMap.merge(existing, HeatMap.build(imported)), wh, "HeatMapTable")
   }
 
   private def updateTripsMap(spark: SparkSession, wh: String, imported: DataFrame,
-                             provider: Waypoints.RouteProvider): Unit =
-    updateTripsMap(spark, wh, imported, provider,
-      TableStore.readOrEmpty(spark, wh, "TripTable", tripTableSchema))
-
-  private def updateTripsMap(spark: SparkSession, wh: String, imported: DataFrame,
-                             provider: Waypoints.RouteProvider,
-                             existing: DataFrame): Unit = {
-    val merged = TripsMap.merge(existing, TripsMap.build(imported, provider))
-    TableStore.write(merged, wh, "TripTable")
+                             provider: Waypoints.RouteProvider): Unit = {
+    val existing = TableStore.readOrEmpty(spark, wh, "TripTable", tripTableSchema)
+    TableStore.write(TripsMap.merge(existing, TripsMap.build(imported, provider)),
+      wh, "TripTable")
   }
 
-  private def updateDockMap(spark: SparkSession, wh: String, imported: DataFrame): Unit =
-    updateDockMap(spark, wh, imported,
-      TableStore.readOrEmpty(spark, wh, "DockTable", dockTableSchema))
-
-  private def updateDockMap(spark: SparkSession, wh: String, imported: DataFrame,
-                            existing: DataFrame): Unit = {
+  private def updateDockMap(spark: SparkSession, wh: String, imported: DataFrame): Unit = {
+    val existing = TableStore.readOrEmpty(spark, wh, "DockTable", dockTableSchema)
     val merged = DockMap.merge(DockMap.fromStorage(existing), DockMap.build(imported))
-    val out = DockMap.toStorage(merged)
-    TableStore.write(out, wh, "DockTable")
+    TableStore.write(DockMap.toStorage(merged), wh, "DockTable")
   }
 }

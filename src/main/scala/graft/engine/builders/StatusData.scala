@@ -3,13 +3,15 @@ package graft.engine.builders
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Manifest
 
 /** The StatusDataTable manifest builder (`update_status_data.py:9-51`,
   * schema `table_list.py:64-68`: year INT, month INT, complete BOOL).
   *
   * Reference semantics — one row per year:
   *   - monthly archive: row becomes (year, month, false) — the month
-  *     field holds the LAST loaded month, not a high-water mark;
+  *     field holds the LAST loaded month; archives load in
+  *     chronological order, so every earlier month is covered too;
   *   - yearly archive: row becomes (year, NULL, true).
   */
 object StatusData {
@@ -34,14 +36,14 @@ object StatusData {
     existing.filter(col("year") =!= year).unionByName(delta)
   }
 
-  /** Is this (year, month) archive already recorded?
-    * (`new_file_check.py`: exact row equality — a monthly file is only
-    * skipped when the manifest's month for that year equals it.) */
+  /** Is this (year, month) archive already covered by the manifest?
+    * The row holds the year's LAST loaded month, so every month up to
+    * it is covered ([[Manifest.covers]]); a yearly archive is covered
+    * only by a complete year. */
   def alreadyLoaded(manifest: DataFrame, year: Int, month: Option[Int]): Boolean = {
-    val cond = month match {
-      case Some(m) => col("year") === year && col("month") === m
-      case None => col("year") === year && col("month").isNull
-    }
+    val cond = Manifest.covers(lit(year),
+      month.fold(lit(null).cast(IntegerType))(m => lit(m)),
+      col("year"), col("month"), col("complete"))
     !manifest.filter(cond).limit(1).isEmpty
   }
 }

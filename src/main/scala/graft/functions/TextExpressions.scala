@@ -361,7 +361,8 @@ object WordShinglesExpr {
   * " "), "\s+", " "))`): the chain is three full passes — a unicode
   * lowercase materialization plus TWO java.util.regex NFA scans —
   * over every corpus byte, and it measured 22.9 s of
-  * normalizedGroups' 24.1 s at the x100 ladder point (ProbeLm; the
+  * normalizedGroups' 24.1 s at the x100 ladder point (PLANS.md
+  * "Round-13 continuation"; the
   * md5-groupBy itself is 0.5 s). This kernel is a single branch-per-
   * byte loop inside whole-stage codegen.
   *

@@ -122,12 +122,12 @@ object Bpe {
     *
     * Step-count honesty: each merge is one distributed aggregate over
     * the cached vocabulary — ~1.5 s of fixed job overhead per step at
-    * local[32] (ProbeText). Fine for the tens-to-hundreds of merges
-    * the oracle-checked q92 exercises; a production 30k-merge
-    * vocabulary trains through [[trainMergesBatched]], which amortizes
-    * the scheduler round-trips ~batch-fold. This strict form is the
-    * batch=1 special case, kept as the exact-Sennrich regression
-    * anchor. */
+    * local[32] (PLANS.md "Text operators (q91–q93)"). Fine for the
+    * tens-to-hundreds of merges the oracle-checked q92 exercises; a
+    * production 30k-merge vocabulary trains through
+    * [[trainMergesBatched]], which amortizes the scheduler round-trips
+    * ~batch-fold. This strict form is the batch=1 special case, kept as
+    * the exact-Sennrich regression anchor. */
   def trainMerges(docs: DataFrame, steps: Int): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
     val spark = docs.sparkSession

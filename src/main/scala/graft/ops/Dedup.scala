@@ -48,7 +48,8 @@ object Dedup {
     *
     * Evaluated by the [[graft.functions.NormalizeTextExpr]] codegen
     * kernel (one byte pass; the three-pass regex chain measured
-    * 22.9 s of the op's 24.1 s at the x100 ladder point — ProbeLm).
+    * 22.9 s of the op's 24.1 s at the x100 ladder point — PLANS.md
+    * "Round-13 continuation").
     * [[canonicalKeyRegex]] is the chain the kernel replaced and the
     * oracle replays; their exact equivalence (everything but the two
     * Java-case-folding exotics the kernel scaladoc names) is

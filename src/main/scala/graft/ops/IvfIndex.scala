@@ -152,7 +152,8 @@ object IvfIndex {
     * measured against the exact kernel (IvfNearDupSpec), not
     * guaranteed.
     *
-    * HONEST REGIME (measured, ProbeIvfScale on the ~uniform synthetic
+    * HONEST REGIME (measured — PLANS.md "IVF-clustered near-dup
+    * pairs (round 9, q74)" — on the ~uniform synthetic
     * corpus, threshold 0.45, 20k vectors): the exact kernel wins
     * outright at this n (3.0 s vs 6–14 s; 1.3e10 flops is nothing),
     * and holding 97% recall with scaled k needed nProbe=8 because

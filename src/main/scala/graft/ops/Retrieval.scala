@@ -300,8 +300,9 @@ object Retrieval {
     * outgrows it — results identical, VocabJoinSpec), and the
     * per-doc top-m compiles to WindowGroupLimit (bounded per-group
     * heaps, no full sort). Round 17 MEASURED the df-cache alternative
-    * ([[VocabJoin.joinCached]]) here and it is a WASH (ProbeVocabCache
-    * interleaved A/B at sf0.1: cached min 2.03 s vs uncached 1.95 s):
+    * ([[VocabJoin.joinCached]]) here and it is a WASH (interleaved A/B
+    * at sf0.1: cached min 2.03 s vs uncached 1.95 s;
+    * OPTIMIZATION_r17.md "q131 / q136"):
     * unlike q91/q115, the df build side shares the tf partial-agg
     * EXCHANGE with the join's stream side inside the serving action,
     * so ReuseExchange already dedupes it — the cache can only shave
@@ -314,8 +315,8 @@ object Retrieval {
 
   /** [[tfidfKeywords]] with the round-17 df cache switchable —
     * `cachedDispatch = true` is the measured-and-rejected cached
-    * form, kept ONLY as ProbeVocabCache's A/B twin so the measured
-    * comparison can never drift from the production kernel. */
+    * form, kept ONLY as VocabJoinCachedSpec's parity twin so the
+    * recorded comparison can never drift from the production kernel. */
   private[graft] def tfidfKeywordsDispatch(docs: DataFrame, m: Int,
       cachedDispatch: Boolean): DataFrame = {
     require(m >= 1, s"m=$m must be >= 1")
@@ -362,11 +363,12 @@ object Retrieval {
     * df via [[VocabJoin]]'s counted dispatch, per-cluster top-m
     * through WindowGroupLimit. Same smoothed integer idf rational as
     * the whole lexical family. Round 17 MEASURED the df-cache
-    * alternative here and it is a WASH like q131's (ProbeVocabCache
-    * at sf0.1: cached min 6.33 s vs uncached 5.43 s, inside the rep
-    * noise): the df build side reuses the (cluster, token) partial-agg
-    * exchange inside the serving action, so only the dispatch count's
-    * pass is in play and the cache pays that pass to fill itself.
+    * alternative here and it is a WASH like q131's (at sf0.1: cached
+    * min 6.33 s vs uncached 5.43 s, inside the rep noise; same
+    * OPTIMIZATION_r17.md section): the df build side reuses the
+    * (cluster, token) partial-agg exchange inside the serving action,
+    * so only the dispatch count's pass is in play and the cache pays
+    * that pass to fill itself.
     * Kept on the plain counted dispatch. Output:
     * (cluster_root, rank, token, tf, score_x1M). */
   def clusterKeywords(docs: DataFrame, clusters: DataFrame,
@@ -375,7 +377,7 @@ object Retrieval {
 
   /** [[clusterKeywords]] with the round-17 df cache switchable —
     * `cachedDispatch = true` is the measured-and-rejected cached
-    * form, kept ONLY as ProbeVocabCache's A/B twin. */
+    * form, kept ONLY as VocabJoinCachedSpec's parity twin. */
   private[graft] def clusterKeywordsDispatch(docs: DataFrame,
       clusters: DataFrame, m: Int, cachedDispatch: Boolean): DataFrame = {
     require(m >= 1, s"m=$m must be >= 1")

@@ -368,13 +368,14 @@ object Similarity {
     val scale = (1L << scaleBits).toDouble
     // above the crossover use the AUTO-sized LSH path: the default
     // fixed 2-bit bands admit nearly every pair once the corpus grows
-    // (ProbeSemDedup measured 114 s at 20k vectors / timeout at 60k
-    // against ~30 s with the sizing law — the exact failure mode
+    // (measured 114 s at 20k vectors / timeout at 60k against ~30 s
+    // with the sizing law, PLANS.md "q96 SemDeDup at the production
+    // threshold" — the exact failure mode
     // lshBandConfig exists to prevent). This buys the q69/q76
     // production trade: candidates are exactly verified, and the law
     // sizes bands so near-clones (cos >= 0.99) are recovered with
     // miss <= 1e-4, while borderline organic pairs near the threshold
-    // carry the documented higher miss (ProbeSemDedup: 9 of ~20k
+    // carry the documented higher miss (same section: 9 of ~20k
     // clusters differ at x10 vs the exhaustive 2-bit bands). Below
     // the crossover (q96's registered 0.4) the blocked kernel is
     // exhaustive and the oracle replay exact.

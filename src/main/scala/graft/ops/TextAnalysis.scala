@@ -86,9 +86,9 @@ object TextAnalysis {
   }
 
   /** The pre-round-18 Column-chain [[quality]] — kept ONLY as the
-    * kernel's equivalence twin (QualityKernelSpec) and the A/B probe
-    * body (ProbeQualityKernel), so the measured comparison can never
-    * drift from what production replaced. */
+    * kernel's equivalence twin (QualityKernelSpec), so the measured
+    * comparison (OPTIMIZATION_r18.md, work item 1) can never drift
+    * from what production replaced. */
   private[graft] def qualityColumns(docs: DataFrame): DataFrame = {
     val t = col("text")
     val nWords = size(tokens(t)).cast("long")
@@ -136,7 +136,7 @@ object TextAnalysis {
     graft.functions.QualityFunctions.qualityKeep(t, QualityStopwords)
 
   /** The pre-round-18 Column-chain [[qualityKeep]] — the kernel's
-    * equivalence twin (QualityKernelSpec / ProbeQualityKernel only). */
+    * equivalence twin (QualityKernelSpec only). */
   private[graft] def qualityKeepColumns(t: Column): Column = {
     val nWords = size(tokens(t)).cast("long")
     val padded = concat(lit(" "), lower(t), lit(" "))
@@ -162,8 +162,7 @@ object TextAnalysis {
       .getField("scrubbed")
 
   /** The pre-round-18 chained-`regexp_replace` [[scrubText]] — the
-    * kernel's equivalence twin (QualityKernelSpec /
-    * ProbeQualityKernel only). */
+    * kernel's equivalence twin (QualityKernelSpec only). */
   private[graft] def scrubTextColumns(t: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(t,
       EmailRe, "<EMAIL>"), PhoneRe, "<PHONE>"), IpRe, "<IP>")
@@ -633,8 +632,8 @@ object TextAnalysis {
     * [[VocabJoin.joinCached]] — its lineage is DISJOINT from the
     * corpus shingle stream, so no exchange reuse covered it and the
     * ref-slice aggregation ran once for the dispatch count and again
-    * for the join's build side (ProbeVocabCache interleaved A/B at
-    * sf0.1: 1.22 s → 0.85 s, rows checksum-identical).
+    * for the join's build side (interleaved A/B at sf0.1: 1.22 s →
+    * 0.85 s, rows checksum-identical; OPTIMIZATION_r17.md "q91 / q95").
     *
     * Output: (doc_id, n_tri, ref_hits, score_x1000, bucket). */
   def referenceOverlapScore(docs: DataFrame, refSource: String = "src0",
@@ -645,8 +644,8 @@ object TextAnalysis {
     * ref-vocab cache switchable — `cachedDispatch = false` is the
     * pre-r17 form (the dispatch count action and the join's build
     * side each re-ran the reference slice's shingle aggregation),
-    * kept as ProbeVocabCache's A/B twin and VocabJoinCachedSpec's
-    * parity anchor. */
+    * kept as the round-17 A/B twin and VocabJoinCachedSpec's parity
+    * anchor. */
   private[graft] def referenceOverlapDispatch(docs: DataFrame,
       refSource: String, minDf: Int, cachedDispatch: Boolean): DataFrame = {
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
@@ -798,7 +797,7 @@ object TextAnalysis {
   }
 
   /** The pre-round-18 Column-chain [[piiScrub]] — the kernel's
-    * equivalence twin (QualityKernelSpec / ProbeQualityKernel only). */
+    * equivalence twin (QualityKernelSpec only). */
   private[graft] def piiScrubColumns(docs: DataFrame): DataFrame = {
     val (email, phone, ip) = (EmailRe, PhoneRe, IpRe)
     val t0 = col("text")
@@ -882,7 +881,8 @@ object TextAnalysis {
     // CACHED across the dispatch action and the serving join: the
     // driver aggregate below is a second ACTION, and actions share no
     // exchange reuse — uncached, the corpus tokenize+groupBy ran once
-    // per action (measured +0.34 s at sf0.1, ProbeLmDispatch; the
+    // per action (measured +0.34 s at sf0.1, PLANS.md "Round 16:
+    // bench truth"; the
     // round-13 single-action form was exchange-reused). The cache is
     // vocabulary-sized (Heaps-bounded — the same budget argument as
     // the broadcast branch), recomputable on eviction, materialized
@@ -1338,9 +1338,9 @@ object TextAnalysis {
     * [[NbPivotMaxClassesKey]] (default 128): past the budget the
     * docs×classes kernel of rounds ≤16 runs instead — wide-pivot
     * plans stop paying past hundreds of columns, and the class list
-    * must be driver-collectable. Measured (ProbeNbSinglePass x100,
-    * interleaved ×3, kept sets identical): capstone stages 5–6
-    * 19.52 → 12.18 s min; the ×5-class blowup of the scoring join and
+    * must be driver-collectable. Measured (x100, interleaved ×3, kept
+    * sets identical; PLANS.md round 17 "Second half"): capstone
+    * stages 5–6 19.52 → 12.18 s min; the ×5-class blowup of the scoring join and
     * aggregate map side was the cost. No corpus-sized join-back;
     * driver-side model state = the ≤budget (class, bdef, bprior)
     * rows.
@@ -1360,7 +1360,7 @@ object TextAnalysis {
     * CALLER — the production shape where the trusted labeled corpus
     * is EXTERNAL and constant-size while the corpus being scored
     * grows (the mod-slice convention above is the testdata's stand-in
-    * for it; ProbeCapstone's pinned-trust ladder point measures the
+    * for it; PLANS.md "The pinned-trust NB ladder point" measured the
     * external shape). Every train-side frame the kernel builds (the
     * per-class token stats, T_c, V, priors) is trusted-corpus-sized,
     * independent of |testDocs| — with the train side pinned, the only
@@ -1395,10 +1395,9 @@ object TextAnalysis {
         // fallback past the pivot budget: the docs×classes kernel —
         // argmin as an AGGREGATE (min over struct(bits_total, c_lang)
         // is lexicographic = the (bits asc, class asc) tie-break); a
-        // partial+final SortAggregate pair, no added exchange.
-        // ProbeNbSinglePass hosts the window tail as the A/B twin
-        // over the SAME classicScored, so the comparison cannot
-        // drift from this kernel's law.
+        // partial+final SortAggregate pair, no added exchange. The
+        // row_number-window tail it replaced measured a wash (PLANS.md
+        // "The NB-gate single-pass idea").
         classicScored(m, testDocs)
           .groupBy(col("doc_id"), col("lang"))
           .agg(min(struct(col("bits_total"), col("c_lang"))).as("m"))
@@ -1513,10 +1512,8 @@ object TextAnalysis {
   }
 
   /** The docs×classes per-(doc, class) scoring over an [[NbModel]] —
-    * the pre-r17 kernel body, now the past-budget fallback and the
-    * probe twins' shared base. */
-  private[graft] def classicScored(m: NbModel,
-                                   testDocs: DataFrame): DataFrame = {
+    * the pre-r17 kernel body, now the past-budget fallback. */
+  private def classicScored(m: NbModel, testDocs: DataFrame): DataFrame = {
     val testTok = testDocs
       .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("t"))
     VocabJoin.join(
@@ -1526,15 +1523,5 @@ object TextAnalysis {
       .agg(sum(coalesce(col("b"), col("bdef"))).as("sb"))
       .select(col("doc_id"), col("lang"), col("c_lang"),
         (col("bprior") + col("sb")).as("bits_total"))
-  }
-
-  /** The docs×classes scored frame + its cache handle — kept for
-    * ProbeNbSinglePass's window-argmin twin: returns (scored, cnt)
-    * where `cnt` must be unpersisted by the caller AFTER
-    * materializing what it derives from `scored`. */
-  private[graft] def nbScoredFrame(trainDocs: DataFrame,
-                                   testDocs: DataFrame): (DataFrame, DataFrame) = {
-    val m = nbModel(trainDocs)
-    (classicScored(m, testDocs), m.cnt)
   }
 }

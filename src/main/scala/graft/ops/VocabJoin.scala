@@ -83,9 +83,10 @@ object VocabJoin {
     * exactly once per execution instead of once per
     * action-plus-build-side.
     *
-    * WHEN it pays (measured, ProbeVocabCache interleaved A/B at
-    * sf0.1): only when the vocab's lineage does NOT share an exchange
-    * with the join's stream side. referenceOverlapScore's ref-slice
+    * WHEN it pays (measured by an interleaved A/B at sf0.1,
+    * OPTIMIZATION_r17.md "q91 / q95" and "q131 / q136"): only when
+    * the vocab's lineage does NOT share an exchange with the join's
+    * stream side. referenceOverlapScore's ref-slice
     * aggregate is such a case (disjoint from the corpus shingle
     * stream: 1.22 s → 0.85 s). When the vocab is an aggregate OVER
     * the stream side (tfidfKeywords/clusterKeywords' df over tf),

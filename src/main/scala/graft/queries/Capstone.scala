@@ -7,10 +7,10 @@ import graft.engine.Checkpoints
 import graft.ops.{Dedup, Packing, Sampling, Similarity, TextAnalysis}
 
 /** The curation capstone v2 (q147) as SHARED stage builders — one
-  * definition used by both the Registry entry and ProbeCapstone, so
-  * the ladder can never drift from the gated composition (a probe
-  * that re-transcribes the pipeline measures whatever it transcribed,
-  * not what the gate runs).
+  * definition used by the Registry entry and by the capstone ladders
+  * in PLANS.md ("Capstone ladder, round 16"), so those numbers measure
+  * the gated composition (a ladder that re-transcribes the pipeline
+  * measures whatever it transcribed, not what the gate runs).
   *
   * Ten chained stages, the DCLM/FineWeb-shaped end-to-end:
   *   1–3. heuristic quality gates → corpus length gate → PII scrub
@@ -90,8 +90,9 @@ object Capstone {
   /** [[decontam]] with the bench frame supplied by the caller — the
     * gated entry derives bench as the emb %10=3 slice (the testdata's
     * eval-set convention, which grows with the corpus); a production
-    * eval set is CONSTANT-size and external, and ProbeCapstone's
-    * pinned-bench ladder point measures exactly that shape. The
+    * eval set is CONSTANT-size and external, and the pinned-bench
+    * ladder point (PLANS.md "Capstone ladder, round 16") measured
+    * exactly that shape. The
     * corpus-side law is unchanged either way (eval-reserved %10=3
     * docs always leave the corpus). Round 17: routes through the
     * τ-DISPATCHED [[Similarity.contaminationKeep]] — at the gated
@@ -119,8 +120,9 @@ object Capstone {
     * 5–6 sharing a pinned (doc_id, t, cnt) frame, every Σ_tokens
     * term count-weighted — the q115 single-pass discipline applied
     * ACROSS stages) and measured it INDISTINGUISHABLE at x100
-    * (`tools/ProbeNbSinglePass`, interleaved same-JVM A/B with the
-    * block cache cleared per rep, kept sets asserted identical:
+    * (PLANS.md "The NB-gate single-pass idea": interleaved same-JVM
+    * A/B with the block cache cleared per rep, kept sets asserted
+    * identical:
     * ~19 s both forms): what the shared pass saves (two
     * whole-stage-codegen tokenize scans over the already-pinned
     * stage-4 text) it pays back in the corpus-sized (doc, token)
@@ -147,7 +149,7 @@ object Capstone {
     * trusted-corpus-sized, so with the trust pinned the stage's only
     * corpus-scaled term is the scoring pass over `dec` — ALL of which
     * is held out (the trusted docs are external, not a kept slice).
-    * ProbeCapstone's `PROBE_TRUST_DIR` ladder point measures this
+    * PLANS.md "The pinned-trust NB ladder point" measured this
     * shape; the GATED entry keeps the mod-slice law so the oracle
     * replays it. */
   def nbGateTrust(dec: DataFrame, trustDocs: DataFrame): DataFrame = {

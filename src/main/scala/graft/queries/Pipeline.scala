@@ -1493,10 +1493,11 @@ object Pipeline {
     // sizing law and the exact kernel (q27) needs Θ(n²d). The
     // MODERATE-threshold regime was measured and declined: at 0.45 on
     // this ~uniform corpus, any config that actually prunes loses
-    // recall (ProbeIvfScale: 97% recall needed nProbe=8 at 14 s where
-    // exact runs 3 s at 20k vectors) — cluster pruning at moderate
-    // sim pays only on corpora with real cluster structure, and the
-    // operator's scaladoc prices that openly. The quantizer is the
+    // recall (97% recall needed nProbe=8 at 14 s where exact runs 3 s
+    // at 20k vectors — PLANS.md "IVF-clustered near-dup pairs") —
+    // cluster pruning at moderate sim pays only on corpora with real
+    // cluster structure, and the operator's scaladoc prices that
+    // openly. The quantizer is the
     // data-adaptive sample quantizer (sampleCentroids, cell target
     // 64): k GROWS with the corpus — any pinned-literal quantizer
     // saturates quadratically once cells outgrow the target (measured:
@@ -2490,8 +2491,8 @@ object Pipeline {
     // mix → pack tail over the survivors. Ten chained stages, one
     // pin-free oracle; the full design narrative, the waypoint
     // pin-vs-cache lesson, and the pinned-output rationale live on the
-    // [[Capstone]] object (shared with ProbeCapstone so the ladder can
-    // never drift from the gated composition).
+    // [[Capstone]] object (whose shared stage builders the PLANS.md
+    // capstone ladders measured).
     Q("q147_curation_capstone", "pipeline:curation-capstone-v2",
       Some(capstoneOracle),
       (s, dir) => Capstone.run(
@@ -3992,9 +3993,8 @@ object Pipeline {
       |ORDER BY user_id, start_micros""".stripMargin
 
   // The arrival harness (mtime-pinned wave writer + the session wave
-  // law) lives in [[graft.streaming.WaveHarness]], SHARED with
-  // ProbeStreamScale so the ladder can never measure a transcription
-  // that drifted from what the gate runs.
+  // law) lives in [[graft.streaming.WaveHarness]], the code the
+  // PLANS.md streaming ladders measured.
   private def writeWave(df: DataFrame, srcDir: String, wave: Int): Unit =
     graft.streaming.WaveHarness.writeWave(df, srcDir, wave)
   private def writeSessionWaves(events: DataFrame, src: String): Unit =

@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** The streaming-gate ARRIVAL harness, in exactly one place — shared
   * by the gated drain queries (q103/q105–q109/q143/q145/q148 via
-  * graft.queries.Pipeline) and the scale ladders (ProbeStreamScale),
-  * so a probe can never measure a transcription that drifted from
-  * what the gate runs (the Capstone shared-builder discipline; the
-  * round-16 self-review found the wave law transcribed in four
-  * places). */
+  * graft.queries.Pipeline); the scale ladders recorded in PLANS.md
+  * ("Streaming ladder") ran this same code, so they measured what the
+  * gate runs rather than a transcription that drifted from it (the
+  * Capstone shared-builder discipline; the round-16 self-review
+  * found the wave law transcribed in four places). */
 object WaveHarness {
 
   /** Write one arrival wave as ONE parquet file with a PINNED,

@@ -1,10 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import graft.Bench
 
 /** Plan-audit tool (not part of the driver contract): prints the
   * formatted physical plan of registered queries, or times one query.
+  * Runs in [[Bench]]'s session (`SPARK_GRAFT_CPUS`, UTC, AQE) and
+  * times through Bench's noop-sink runner, so its numbers are
+  * comparable with a `SPARK_GRAFT_BENCH_ONLY` bench run.
   *
   * Usage:
   *   graft.tools.Probe explain [sfDir] [queryName ...]
@@ -12,11 +15,7 @@ import org.apache.spark.sql.execution.FormattedMode
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.newSession()
     val mode = args.headOption.getOrElse("explain")
     mode match {
       case "time" =>
@@ -27,17 +26,11 @@ object Probe {
         val name = args(1)
         val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
         val reps = if (args.length > 3) args(3).toInt else 3
+        // runOne clears the cache first, so a rep cannot serve the
+        // previous rep's materialized result from the block store
         for (i <- 1 to reps) {
-          // without this, a rep can serve the previous rep's
-          // materialized result straight from the block store (cache
-          // lookup is by logical-plan equality) and read ~2x fast —
-          // measured on q77; fresh-session Bench is the methodology
-          // of record, this keeps the quick tool from flattering
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          graft.queries.Registry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          println(f"$name run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          val t = Bench.runOne(spark, name, dir)
+          println(if (t < 0) s"$name run $i: failed" else f"$name run $i: $t%.2f s")
         }
       case _ =>
         val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 
@@ -45,20 +44,14 @@ import graft.engine.Tables
   *    as a real 10x corpus would.
   *
   * Usage: ScaleGen <srcSfDir> <dstDir> <factor>
+  * (runs in [[graft.Bench]]'s session: `SPARK_GRAFT_CPUS` cores)
   */
 object ScaleGen {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleGen <srcSfDir> <dstDir> <factor>")
     val Array(src, dst, factorS) = args
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.newSession()
 
     val docs = Tables(spark, src, "documents")
     val nDocs = docs.agg(max(col("doc_id"))).head().getLong(0) + 1

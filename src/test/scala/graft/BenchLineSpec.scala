@@ -99,6 +99,35 @@ class BenchLineSpec extends AnyFunSuite {
     assert(!Bench.compactLine(fakeResults(3), "/sf").contains("flaky"))
   }
 
+  test("a failed query is named in a `failed` marker with its count at " +
+    "every ladder level, inside the budget, and absent when none failed") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val slow = (0 until 150).map(i =>
+      (f"q$i%03d_some_very_long_query_name_indeed_x", Bench.Probe(9.9, 9.9, None)))
+    val broken = (0 until 5).map(i =>
+      (s"q90${i}_broken_query_name", Bench.Probe(-1.0, -1.0, None)))
+    // the untruncated level, the real registry's dec1 level and the
+    // bounded top-K fallback
+    val shapes = Seq(fakeResults(3),
+      names.map((_, Bench.Probe(2.34, 2.41, None))), slow)
+    val sf = "/data/testdata/sf0.1"
+    shapes.foreach { ok =>
+      val line = Bench.compactLine(ok ++ broken, sf)
+      assert(line.length < Bench.LineBudget, s"${line.length} over budget")
+      assert(line.contains(""""failed":["q900_broken_query_name",""" +
+        """"q901_broken_query_name","q902_broken_query_name"],"failed_n":5,"""),
+        line)
+      // the failed queries add nothing to the headline totals
+      val clean = Bench.compactLine(ok, sf)
+      val total = """"value":([0-9.]+)""".r
+      assert(total.findFirstMatchIn(line).map(_.group(1)) ==
+        total.findFirstMatchIn(clean).map(_.group(1)))
+      assert(!clean.contains("failed"), clean)
+    }
+    // one good run is not a failure
+    assert(!Bench.Probe(-1.0, 1.5, None).failed)
+  }
+
   test("contention sentinel: the line self-labels when any query is " +
     "flaky or the raw total diverges >1.3x from best-known") {
     // any flaky query -> contended (the flaky fixture above)

@@ -121,7 +121,10 @@ class BuildersSpec extends SparkSpec {
     assert(!StatusData.alreadyLoaded(m1, 2021, Some(2)))
     val m2 = StatusData.markLoaded(m1, 2021, Some(2))
     assert(m2.count() == 1) // replaced, not appended
-    assert(!StatusData.alreadyLoaded(m2, 2021, Some(1))) // only last month recorded
+    // the row records the last loaded month: every month up to it is
+    // covered, later ones are not
+    assert(StatusData.alreadyLoaded(m2, 2021, Some(1)))
+    assert(!StatusData.alreadyLoaded(m2, 2021, Some(3)))
     val m3 = StatusData.markLoaded(m2, 2021, None)
     assert(StatusData.alreadyLoaded(m3, 2021, None))
     assert(m3.filter($"complete").count() == 1)

@@ -124,5 +124,16 @@ class PipelineSpec extends SparkSpec {
 
     val status2 = TableStore.read(spark, wh, "StatusDataTable").collect()
     assert(status2.length == 1 && status2(0).getAs[Int]("month") == 2)
+
+    // no new archive after February: January is covered by the
+    // manifest row too, so nothing is re-queued or counted twice
+    def totals = (
+      TableStore.read(spark, wh, "LineGraphTable")
+        .agg(sum("subscriber_count"), sum("customer_count")).head().toSeq,
+      TableStore.read(spark, wh, "HeatMapTable")
+        .agg(sum("total_count")).as[Long].head())
+    val before = totals
+    assert(CitibikePipeline.run(spark, in, wh) == 0)
+    assert(totals == before)
   }
 }

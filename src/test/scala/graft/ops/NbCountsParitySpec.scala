@@ -2,17 +2,17 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.engine.Tables
-import graft.tools.ProbeNbSinglePass
 import org.apache.spark.sql.functions._
 
-/** The token-count LM kernel VARIANTS hosted in
-  * [[graft.tools.ProbeNbSinglePass]] (docTokenCounts /
-  * nbLangClassifierCounts / crossEntropySelectCounts) — the
-  * shared-single-tokenize-pass forms round 17 measured a WASH against
-  * the gated per-occurrence kernels (the first "~2× slower" reading
-  * was the probe's own cache bias — postmortem in PLANS "Round 17")
-  * and therefore did NOT ship in the capstone.
-  * The probe's A/B conclusion is only meaningful if the variants
+/** The token-count LM kernel VARIANTS hosted in [[NbCounts]]
+  * (docTokenCounts / nbLangClassifierCounts /
+  * crossEntropySelectCounts) — the shared-single-tokenize-pass forms
+  * round 17 measured a WASH against the gated per-occurrence kernels
+  * (the first "~2× slower" reading was the A/B harness's own cache
+  * bias — postmortem in PLANS.md, "The NB-gate single-pass idea:
+  * measured, and it buys nothing") and therefore did NOT ship in the
+  * capstone.
+  * That A/B conclusion is only meaningful if the variants
   * compute the same rows, so the binding contract stays pinned: every
   * Σ_tokens f(t) term replayed as Σ_distinct cnt·f(t), integer math
   * throughout — on hand-worked corpora with the edge cases that
@@ -52,7 +52,7 @@ class NbCountsParitySpec extends SparkSpec {
     import sp.implicits._
     val docs = Seq((1L, "en", "A a  b\tA"), (2L, "de", "b"))
       .toDF("doc_id", "lang", "text")
-    val got = ProbeNbSinglePass.docTokenCounts(docs)
+    val got = NbCounts.docTokenCounts(docs)
       .orderBy("doc_id", "t").collect().toSeq
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getLong(3)))
@@ -66,8 +66,8 @@ class NbCountsParitySpec extends SparkSpec {
     val docs = handCorpus
     val classic = TextAnalysis.nbLangClassifier(docs)
       .orderBy("doc_id").collect().toSeq.map(_.toString)
-    val counts = ProbeNbSinglePass.nbLangClassifierCounts(docs,
-        ProbeNbSinglePass.docTokenCounts(docs))
+    val counts = NbCounts.nbLangClassifierCounts(docs,
+        NbCounts.docTokenCounts(docs))
       .orderBy("doc_id").collect().toSeq.map(_.toString)
     assert(classic.nonEmpty, "fixture produced no classified docs")
     assert(counts === classic)
@@ -84,8 +84,8 @@ class NbCountsParitySpec extends SparkSpec {
     val classic = TextAnalysis.crossEntropySelect(docs, pred,
         buckets = 8, thetaX1000 = 0L)
       .orderBy("doc_id").collect().toSeq.map(_.toString)
-    val counts = ProbeNbSinglePass.crossEntropySelectCounts(
-        ProbeNbSinglePass.docTokenCounts(docs, Seq("source")), pred,
+    val counts = NbCounts.crossEntropySelectCounts(
+        NbCounts.docTokenCounts(docs, Seq("source")), pred,
         buckets = 8, thetaX1000 = 0L)
       .orderBy("doc_id").collect().toSeq.map(_.toString)
     assert(classic.nonEmpty, "fixture produced no CE scores")
@@ -157,17 +157,17 @@ class NbCountsParitySpec extends SparkSpec {
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { d =>
       val docs = Tables.floored(spark, d, "documents", "doc_id")
         .select("doc_id", "text", "lang", "source")
-      val tok = ProbeNbSinglePass.docTokenCounts(docs, Seq("lang", "source"))
+      val tok = NbCounts.docTokenCounts(docs, Seq("lang", "source"))
       val nbClassic = TextAnalysis.nbLangClassifier(docs)
         .orderBy("doc_id").collect().toSeq.map(_.toString)
-      val nbCounts = ProbeNbSinglePass.nbLangClassifierCounts(docs, tok)
+      val nbCounts = NbCounts.nbLangClassifierCounts(docs, tok)
         .orderBy("doc_id").collect().toSeq.map(_.toString)
       assert(nbCounts === nbClassic, s"NB diverges at $d")
       val pred = col("source") === "src0"
       val ceClassic = TextAnalysis.crossEntropySelect(docs, pred,
           buckets = 256, thetaX1000 = 0L)
         .orderBy("doc_id").collect().toSeq.map(_.toString)
-      val ceCounts = ProbeNbSinglePass.crossEntropySelectCounts(tok, pred,
+      val ceCounts = NbCounts.crossEntropySelectCounts(tok, pred,
           buckets = 256, thetaX1000 = 0L)
         .orderBy("doc_id").collect().toSeq.map(_.toString)
       assert(ceCounts === ceClassic, s"CE diverges at $d")

@@ -6,11 +6,12 @@ import graft.SparkSpec
   * on tfidfKeywords / clusterKeywords / referenceOverlapScore swaps
   * [[VocabJoin.join]] for [[VocabJoin.joinCached]] and MUST be
   * row-invisible — it only changes whether the vocabulary frame's
-  * lineage re-runs per action. ProbeVocabCache measures the two at
-  * sf0.1 (q91 ships cached, 1.22 → 0.85 s; q131/q136 measured a wash
-  * and ship uncached); this spec pins that the flag can never change
-  * a result, on both the shipped and the rejected settings, so the
-  * probe's A/B and the gate stay comparable across rounds. */
+  * lineage re-runs per action. Round 17 measured the two at sf0.1
+  * (q91 ships cached, 1.22 → 0.85 s; q131/q136 measured a wash and
+  * ship uncached — OPTIMIZATION_r17.md "q91 / q95" and "q131 / q136");
+  * this spec pins that the flag can never change a result, on both
+  * the shipped and the rejected settings, so the recorded A/B and the
+  * gate stay comparable across rounds. */
 class VocabJoinCachedSpec extends SparkSpec {
   import spark.implicits._
 
